@@ -1436,7 +1436,13 @@ object SparkEntry {
     storedPpJoinIndexMemo.clear()
     storedFullPpJoinIndexMemo.clear()
     storedIvfIndexMemo.clear()
+    appendedIvfMemo.clear()
+    annDeletedMemo.clear()
+    storedIvfPqMemo.clear()
     bm25Memo.clear()
+    segmentedBm25Memo.clear()
+    segmentedBm25DelMemo.clear()
+    storedBm25Memo.clear()
     pqMemo.clear()
     timeTravelStoreMemo.clear()
     zMirrorMemo.clear()

@@ -60,6 +60,9 @@ final class TimeDb(val spark: SparkSession, basePath: String,
 
   val store = new SeriesStore(spark, basePath)
 
+  private val SliceCol = "_slice"
+  private val bySlice = Seq(col(SliceCol))
+
   def create(): Unit = store.create()
   def delete(): Unit = store.delete()
 
@@ -106,7 +109,6 @@ final class TimeDb(val spark: SparkSession, basePath: String,
         WritePipeline.requireValidRetentions(bounds.getSeq[String](3))
 
       var stamped = preFilter
-      var skipped = 0L
       if (skipUnchanged && before > 0) Profiling.phase(Profiling.PhaseWriteSkipUnchanged) {
         // Bounded read-back slab (timedb/write.py:197-214): the incoming
         // batch's series/retentions and valid_time bounds — catalog-sized
@@ -137,8 +139,10 @@ final class TimeDb(val spark: SparkSession, basePath: String,
         stamped = WritePipeline.filterUnchanged(preFilter, storedLatest, unchangedScope).cache()
       }
 
-      val written = stamped.count()
-      if (skipUnchanged) skipped = before - written
+      // only the skip-unchanged filter changes the batch; otherwise the
+      // bounds aggregate has already counted it
+      val written = if (stamped eq preFilter) before else stamped.count()
+      val skipped = before - written
       val rs = WritePipeline.runSeriesOf(stamped, now)
 
       // Concurrent insert lanes (timedb/write.py:115-158): the values and
@@ -183,6 +187,35 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     scan.filter(filter.predicate)
   }
 
+  /** The filtered scan of one read, placed by series range in ONE
+    * exchange. The filter's distinct ids, sorted on the driver, are cut
+    * into `min(#ids, defaultParallelism)` contiguous slices, and each
+    * row goes to its slice's partition (`repartitionById`). The slice
+    * column leads the shape's grouping or window keys (`by`), so this
+    * exchange satisfies the shape's distribution; and as partition k
+    * holds only ids below partition k + 1's, sorting within partitions
+    * gives the total order — no sampling job and no range exchange for a
+    * global sort. The trade: the argmax loses its map-side partial
+    * aggregate, so the exchange carries the filtered rows uncombined. */
+  private def placed(filter: ReadFilter): DataFrame = {
+    val ids = filter.seriesIds.distinct.sorted.toIndexedSeq
+    val n = math.min(ids.size, spark.sparkContext.defaultParallelism)
+    // slice k starts at ids(k * #ids / n); a balanced tree of bounds
+    def slice(lo: Int, hi: Int): Column =
+      if (hi - lo == 1) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        val bound = ids((mid.toLong * ids.size / n).toInt)
+        when(col("series_id") < bound, slice(lo, mid)).otherwise(slice(mid, hi))
+      }
+    scanWith(filter).withColumn(SliceCol, slice(0, n)).repartitionById(n, col(SliceCol))
+  }
+
+  /** Total order of a shape computed over [[placed]] rows: slices are
+    * partitions in id order, so a sort within each one suffices. */
+  private def ordered(shaped: DataFrame, keys: String*): DataFrame =
+    shaped.sortWithinPartitions(SliceCol, keys: _*).drop(SliceCol)
+
   /** Read (timedb/read.py:404-458): 4-way shape dispatch on
     * (includeUpdates, includeKnowledgeTime), NaN→null mask on the way out,
     * deterministic total order (timedb/read.py:244,280,309,337). */
@@ -193,18 +226,18 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     if (filter.seriesIds.isEmpty)
       return emptyShape(includeUpdates, includeKnowledgeTime) // timedb/read.py:421-422
 
-    val base = scanWith(filter)
+    val base = placed(filter)
     val shaped = Profiling.phase(Profiling.PhaseReadPlan) {
       (includeUpdates, includeKnowledgeTime) match {
         case (false, false) =>
-          ReadShapes.latest(base).orderBy("series_id", "valid_time")
+          ordered(ReadShapes.latest(base, bySlice), "series_id", "valid_time")
         case (false, true) =>
-          ReadShapes.overlapping(base).orderBy("series_id", "valid_time", "knowledge_time")
+          ordered(ReadShapes.overlapping(base, bySlice), "series_id", "valid_time", "knowledge_time")
         case (true, false) =>
-          ReadShapes.latestWithChanges(base).orderBy("series_id", "valid_time", "change_time")
+          ordered(ReadShapes.latestWithChanges(base, bySlice), "series_id", "valid_time", "change_time")
         case (true, true) =>
-          ReadShapes.overlappingWithChanges(base)
-            .orderBy("series_id", "valid_time", "knowledge_time", "change_time")
+          ordered(ReadShapes.overlappingWithChanges(base, bySlice),
+            "series_id", "valid_time", "knowledge_time", "change_time")
       }
     }
     maskNaN(shaped)
@@ -236,10 +269,9 @@ final class TimeDb(val spark: SparkSession, basePath: String,
     if (filter.seriesIds.isEmpty) return emptyShape(false, false)
     val origin = startWindow.orElse(filter.startValid).getOrElse(
       throw new IllegalArgumentException("start_window is required when start_valid is not provided."))
-    val shaped = ReadShapes.relative(
-      scanWith(filter), windowLength.getSeconds, issueOffset.getSeconds, origin)
-      .orderBy("series_id", "valid_time")
-    maskNaN(shaped)
+    val shaped = ReadShapes.relative(placed(filter),
+      windowLength.getSeconds, issueOffset.getSeconds, origin, bySlice)
+    maskNaN(ordered(shaped, "series_id", "valid_time"))
   }
 
   /** Relative read, daily shorthand (timedb/read.py:480-492): window=1d,

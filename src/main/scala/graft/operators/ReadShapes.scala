@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   *  - `latestWithChanges`       (updates=T, kt=F): (series_id, valid_time, change_time, value, changed_by, annotation)
   *  - `overlappingWithChanges`  (updates=T, kt=T): (series_id, valid_time, knowledge_time, change_time, value, changed_by, annotation)
   *
+  * The four shapes and `relative` take `by`: columns that lead their
+  * grouping or window keys and their output (default none). A caller that has already placed
+  * rows by such a column — the facade's series-range slice, see
+  * [[graft.TimeDb]] — passes it here, so the exchange it planned
+  * satisfies the operator's distribution and no second one is added.
+  *
   * Scale notes (100 TB): every shape keys its shuffle on
   * `(series_id, valid_time[, knowledge_time])` — cardinality grows with the
   * data, so the shuffle scales with `spark.sql.shuffle.partitions`, never a
@@ -46,11 +52,11 @@ object ReadShapes {
     * aggregate (map-side combine ⇒ shuffle carries one row per group per
     * mapper, not the raw data).
     */
-  def latest(values: DataFrame): DataFrame =
+  def latest(values: DataFrame, by: Seq[Column] = Nil): DataFrame =
     values
-      .groupBy(sid, vt)
+      .groupBy(by ++ Seq(sid, vt): _*)
       .agg(graft.functions.ArgMaxLatest(kt, ct, col("value")).as("value"))
-      .select(sid, vt, col("value"))
+      .select(by ++ Seq(sid, vt, col("value")): _*)
 
   /** The built-in formulation of [[latest]]: `max(struct(kt, ct, value))`
     * via lexicographic struct ordering. Identical semantics, but the
@@ -74,11 +80,11 @@ object ReadShapes {
     * a pure HashAggregate instead of the struct-buffer SortAggregate
     * (no per-partition sort of the fact table).
     */
-  def overlapping(values: DataFrame): DataFrame =
+  def overlapping(values: DataFrame, by: Seq[Column] = Nil): DataFrame =
     values
-      .groupBy(sid, vt, kt)
+      .groupBy(by ++ Seq(sid, vt, kt): _*)
       .agg(graft.functions.ArgMaxLatest(ct, ct, col("value")).as("value"))
-      .select(sid, kt, vt, col("value"))
+      .select(by ++ Seq(sid, kt, vt, col("value")): _*)
 
   /** Correction chain of the winning (max-knowledge_time) forecast per
     * (series_id, valid_time), consecutive duplicate states collapsed
@@ -94,25 +100,25 @@ object ReadShapes {
     * filter (order-preserving) → lag-window, with no re-sort between —
     * at scale that is one full sort pass of the fact table saved.
     */
-  def latestWithChanges(values: DataFrame): DataFrame = {
-    val chain = Window.partitionBy(sid, vt).orderBy(ct.asc)
+  def latestWithChanges(values: DataFrame, by: Seq[Column] = Nil): DataFrame = {
+    val chain = Window.partitionBy(by ++ Seq(sid, vt): _*).orderBy(ct.asc)
     val whole = chain.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     values
       .withColumn("_max_kt", max(kt).over(whole))
       .filter(kt === col("_max_kt"))
       .withColumn("_prev", lag(stateTuple, 1).over(chain))
       .filter(col("_prev").isNull || !(col("_prev") <=> stateTuple))
-      .select(sid, vt, ct, col("value"), col("changed_by"), col("annotation"))
+      .select(by ++ Seq(sid, vt, ct, col("value"), col("changed_by"), col("annotation")): _*)
   }
 
   /** Full 3D audit: every real state transition per
     * (series_id, knowledge_time, valid_time) (timedb/read.py:320-344). */
-  def overlappingWithChanges(values: DataFrame): DataFrame = {
-    val chain = Window.partitionBy(sid, kt, vt).orderBy(ct.asc)
+  def overlappingWithChanges(values: DataFrame, by: Seq[Column] = Nil): DataFrame = {
+    val chain = Window.partitionBy(by ++ Seq(sid, kt, vt): _*).orderBy(ct.asc)
     values
       .withColumn("_prev", lag(stateTuple, 1).over(chain))
       .filter(col("_prev").isNull || !(col("_prev") <=> stateTuple))
-      .select(sid, vt, kt, ct, col("value"), col("changed_by"), col("annotation"))
+      .select(by ++ Seq(sid, vt, kt, ct, col("value"), col("changed_by"), col("annotation")): _*)
   }
 
   /** Per-window as-of cutoff: `cutoff(vt) = window_start(vt; w, origin) +
@@ -132,6 +138,7 @@ object ReadShapes {
 
   /** Relative read (timedb/read.py:352-396): latest-read restricted to
     * rows issued no later than each valid_time's window cutoff. */
-  def relative(values: DataFrame, windowSecs: Long, offsetSecs: Long, startWindow: java.sql.Timestamp): DataFrame =
-    latest(values.filter(kt <= windowCutoff(vt, windowSecs, offsetSecs, lit(startWindow))))
+  def relative(values: DataFrame, windowSecs: Long, offsetSecs: Long, startWindow: java.sql.Timestamp,
+      by: Seq[Column] = Nil): DataFrame =
+    latest(values.filter(kt <= windowCutoff(vt, windowSecs, offsetSecs, lit(startWindow))), by)
 }

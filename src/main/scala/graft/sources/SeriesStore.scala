@@ -70,16 +70,24 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
 
   private val ManifestName = raw"v(\d{8})\.list".r
 
-  private def manifestVersions(): Seq[(Long, Path)] = {
-    if (!fs.exists(manifestsDir)) return Seq.empty
-    fs.listStatus(manifestsDir).toSeq.collect {
+  /** Committed manifests, oldest first, from ONE listing of
+    * `_manifests` (a missing dir — before `create()` or after
+    * `delete()` — lists as empty). */
+  private def manifestStatuses(): Seq[(Long, FileStatus)] = {
+    val listed =
+      try fs.listStatus(manifestsDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.collect {
       case st if st.isFile =>
         st.getPath.getName match {
-          case ManifestName(v) => Some(v.toLong -> st.getPath)
+          case ManifestName(v) => Some(v.toLong -> st)
           case _ => None
         }
     }.flatten.sortBy(_._1)
   }
+
+  private def manifestVersions(): Seq[(Long, Path)] =
+    manifestStatuses().map { case (v, st) => v -> st.getPath }
 
   private def readManifest(p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -164,6 +172,7 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
 
   /** Drop both tables (timedb/client.py:119-120). */
   def delete(): Unit = {
+    snapshot = None
     fs.delete(new Path(valuesPath), true)
     fs.delete(new Path(runSeriesPath), true)
     ()
@@ -202,12 +211,36 @@ final class SeriesStore(spark: SparkSession, basePath: String) {
   def appendRunSeries(rs: DataFrame): Unit =
     rs.write.mode(SaveMode.Append).option("compression", "zstd").parquet(runSeriesPath)
 
+  /** Identity of the current manifest: its version, plus the file's
+    * mtime and length so a `delete()` + `create()` by another handle on
+    * the same path — which restarts the version numbers — misses too. */
+  private case class SnapshotKey(version: Long, mtime: Long, length: Long)
+
+  /** The current snapshot's scan, reused while its manifest is the
+    * newest: every reader of one version shares the relation and its
+    * listed file index instead of re-resolving the manifest's files.
+    * Committed manifests and the files they list are immutable, so the
+    * key is the whole invalidation rule; any commit (append, compaction,
+    * TTL) misses it. */
+  @volatile private var snapshot: Option[(SnapshotKey, DataFrame)] = None
+
   /** Scan series_values — the CURRENT snapshot's files, with `retention`
     * and `valid_month` recovered from the partition paths (`basePath`
     * keeps Catalyst's partition pruning on both). `valid_month` stays
-    * available for manual pruning; readers project it away. */
-  def scanValues(): DataFrame =
-    scanFileList(currentFiles())
+    * available for manual pruning; readers project it away. One listing
+    * of `_manifests` checks the cached snapshot; only a new manifest is
+    * read and its files resolved. */
+  def scanValues(): DataFrame = {
+    val head = manifestStatuses().lastOption.map { case (v, st) =>
+      SnapshotKey(v, st.getModificationTime, st.getLen) -> st.getPath }
+    snapshot match {
+      case Some((key, df)) if head.exists(_._1 == key) => df
+      case _ =>
+        val df = scanFileList(head.map(h => readManifest(h._2)).getOrElse(Seq.empty))
+        snapshot = head.map(_._1 -> df)
+        df
+    }
+  }
 
   /** Committed manifest versions, oldest first — the time-travel axis.
     * Every committed write is one version; [[vacuum]] bounds how far

@@ -33,6 +33,52 @@ class PlanSpec extends SparkSpec {
     db.delete()
   }
 
+  test("facade reads place rows in ONE series-range exchange: no range sort, at most 2 jobs") {
+    val base = java.nio.file.Files.createTempDirectory("timedb_readplan").toString
+    val db = new TimeDb(spark, base)
+    db.create()
+    val rows = (0 until 480).map(h =>
+      (h.toLong % 40, ts(f"2024-03-${h / 24 % 10 + 1}%02dT${h % 24}%02d:00:00Z"), h.toDouble))
+      .toDF("series_id", "valid_time", "value")
+    db.write(rows, knowledgeTime = Some(ts("2024-02-28T00:00:00Z")))
+    db.write(rows.withColumn("value", col("value") + 1), knowledgeTime = Some(ts("2024-02-29T00:00:00Z")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsDuring(body: => Unit): Int = {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      val before = jobs.get(); body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobs.get() - before
+    }
+    // a dashboard read: two series over two days
+    val f = ReadFilter(Seq(3L, 17L), startValid = Some(ts("2024-03-02T00:00:00Z")),
+      endValid = Some(ts("2024-03-04T00:00:00Z")))
+    val reads = Seq(
+      "latest" -> (() => db.read(f)),
+      "overlapping" -> (() => db.read(f, includeKnowledgeTime = true)),
+      "latestWithChanges" -> (() => db.read(f, includeUpdates = true)),
+      "overlappingWithChanges" -> (() => db.read(f, includeUpdates = true, includeKnowledgeTime = true)),
+      "readRelativeDaily" -> (() => db.readRelativeDaily(f, 1, java.time.LocalTime.NOON)))
+    spark.sparkContext.addSparkListener(listener)
+    try for ((shape, read) <- reads) {
+      val df = read()
+      val plan = planOf(df)
+      val exchanges = "Exchange ".r.findAllIn(plan).length
+      assert(exchanges == 1 && plan.contains("Exchange shufflepartitionidpassthrough"),
+        s"$shape: expected one pass-through exchange, got $exchanges:\n$plan")
+      assert(!plan.contains("rangepartitioning"), s"$shape:\n$plan")
+      val n = jobsDuring(df.collect())
+      assert(n <= 2, s"$shape: $n jobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      db.delete()
+    }
+  }
+
   test("bucketed-mirror co-located join (equal bucket counts) plans zero exchanges") {
     val base = java.nio.file.Files.createTempDirectory("timedb_bkjoin").toString
     val db = new TimeDb(spark, base)

@@ -477,6 +477,135 @@ class TimeDbSpec extends SparkSpec {
     }
   }
 
+  test("a plain write counts the batch once: no count job beyond the bounds aggregate") {
+    // jobs are attributed to the SQL execution (Dataset action) that ran
+    // them; a write without skip-unchanged must run no `count` action —
+    // the bounds aggregate already counted the cached batch
+    val descriptions = scala.collection.concurrent.TrieMap.empty[Long, String]
+    val jobExecutions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          descriptions(s.executionId) = s.description
+        case _ => ()
+      }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobExecutions.add(id.toLong))
+    }
+    def countJobsDuring(body: => Unit): Int = {
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobExecutions.clear(); body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+      jobExecutions.toArray.count(id =>
+        descriptions.get(id.asInstanceOf[Long]).exists(_.startsWith("count at ")))
+    }
+    withDb { db =>
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        var plain: WriteResult = null
+        assert(countJobsDuring {
+          plain = db.write(revision(10), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+        } == 0)
+        assert(plain == WriteResult(6, 0))
+        // control: the skip-unchanged filter changes the batch, so that
+        // path must count what is left
+        var replay: WriteResult = null
+        assert(countJobsDuring {
+          replay = db.write(revision(10).withColumn("value", col("value") + (col("value") > 20).cast("double")),
+            knowledgeTime = Some(ts("2024-03-01T01:00:00Z")), skipUnchanged = true)
+        } > 0)
+        assert(replay == WriteResult(3, 3))
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private def fileIndexOf(df: org.apache.spark.sql.DataFrame): AnyRef = {
+    val indexes = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location }
+    assert(indexes.size == 1, indexes)
+    indexes.head
+  }
+
+  private def basePathOf(db: TimeDb): String = db.store.valuesPath.stripSuffix("/series_values")
+
+  private def rowsAt(sid: Long, vt: String, v: Double) =
+    Seq((sid, ts(vt), v)).toDF("series_id", "valid_time", "value")
+
+  test("snapshot scan: the next read sees another handle's commit, compact and expireRetention") {
+    withDb { db =>
+      db.write(revision(1), retention = Some("short"), knowledgeTime = Some(ts("2024-03-01T00:00:00Z")))
+      assert(db.read(ReadFilter(Seq(1L))).as[(Long, java.sql.Timestamp, Double)]
+        .collect().map(_._3).toSeq == (0 until 6).map(_ * 1.0))
+      // a commit by a second handle on the same path
+      val other = new TimeDb(spark, basePathOf(db))
+      other.write(revision(100), retention = Some("short"), knowledgeTime = Some(ts("2024-03-01T03:00:00Z")))
+      assert(db.read(ReadFilter(Seq(1L))).as[(Long, java.sql.Timestamp, Double)]
+        .collect().map(_._3).toSeq == (0 until 6).map(_ * 100.0))
+      // compaction rewrites the month's two files into one
+      val before = db.store.scanValues().inputFiles.toSet
+      assert(before.size == 2)
+      assert(db.compact(maxFiles = 1).nonEmpty)
+      val after = db.store.scanValues().inputFiles.toSet
+      assert(after.size == 1 && after != before)
+      assert(after.map(f => f.substring(f.indexOf("retention="))) == db.store.currentFiles().toSet)
+      assert(db.read(ReadFilter(Seq(1L))).count() == 6)
+      // TTL expiry drops a month the cached snapshot still listed
+      db.write(rowsAt(2L, "2020-01-15T00:00:00Z", 2.0), retention = Some("short"))
+      assert(db.read(ReadFilter(Seq(2L))).count() == 1)
+      assert(db.expireRetention(Instant.parse("2024-03-01T00:00:00Z")) ==
+        Seq("retention=short/valid_month=202001"))
+      assert(db.read(ReadFilter(Seq(2L))).count() == 0)
+    }
+  }
+
+  test("snapshot scan: delete + create + write on the same path serves only the new store") {
+    withDb { db =>
+      db.write(rowsAt(1L, "2024-03-01T00:00:00Z", 1.0))
+      assert(db.read(ReadFilter(Seq(1L, 2L, 3L))).as[(Long, java.sql.Timestamp, Double)]
+        .collect().map(_._1).toSeq == Seq(1L))
+      // through the same handle
+      db.delete(); db.create()
+      db.write(rowsAt(2L, "2024-03-01T00:00:00Z", 2.0))
+      assert(db.read(ReadFilter(Seq(1L, 2L, 3L))).as[(Long, java.sql.Timestamp, Double)]
+        .collect().map(_._1).toSeq == Seq(2L))
+      // through another handle: the manifest restarts at the same version
+      // with a same-length file list, so only its mtime tells them apart
+      val versionBefore = db.store.versions().last
+      val other = new TimeDb(spark, basePathOf(db))
+      other.delete(); other.create()
+      other.write(rowsAt(3L, "2024-03-01T00:00:00Z", 3.0))
+      assert(db.store.versions().last == versionBefore)
+      assert(db.read(ReadFilter(Seq(1L, 2L, 3L))).as[(Long, java.sql.Timestamp, Double)]
+        .collect().map(_._1).toSeq == Seq(3L))
+    }
+  }
+
+  test("snapshot scan: reads at one version share one file index; as-of and change feed unaffected") {
+    withDb { db =>
+      db.write(rowsAt(1L, "2024-03-01T00:00:00Z", 1.0))
+      val v1 = db.store.versions().last
+      db.write(rowsAt(2L, "2024-03-02T00:00:00Z", 2.0))
+      val v2 = db.store.versions().last
+      val first = db.read(ReadFilter(Seq(1L, 2L)))
+      val second = db.read(ReadFilter(Seq(2L)), includeUpdates = true)
+      assert(fileIndexOf(first) eq fileIndexOf(second))
+      assert(fileIndexOf(db.readRelative(ReadFilter(Seq(1L)), Duration.ofDays(1), Duration.ZERO,
+        Some(ts("2024-03-01T00:00:00Z")))) eq fileIndexOf(first))
+      // with the current snapshot cached, older versions still read as of then
+      assert(db.store.scanValuesAsOf(v1).select("series_id").as[Long].collect().toSeq == Seq(1L))
+      assert(db.store.scanChangesBetween(v1, v2).select("series_id").as[Long].collect().toSeq == Seq(2L))
+      // a commit is a new snapshot: new file index, new rows
+      db.write(rowsAt(3L, "2024-03-03T00:00:00Z", 3.0))
+      val third = db.read(ReadFilter(Seq(1L, 2L, 3L)))
+      assert(!(fileIndexOf(third) eq fileIndexOf(first)))
+      assert(third.count() == 3 && first.count() == 2)
+      assert(db.store.scanChangesBetween(v2, db.store.versions().last)
+        .select("series_id").as[Long].collect().toSeq == Seq(3L))
+    }
+  }
+
   test("expireRetention drops only expired non-forever partitions") {
     withDb { db =>
       db.write(Seq((1L, ts("2020-01-15T00:00:00Z"), 1.0)).toDF("series_id", "valid_time", "value"),
